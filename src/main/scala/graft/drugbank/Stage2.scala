@@ -2,6 +2,7 @@ package graft.drugbank
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps
 import graft.stage2.IdentifierAlignment
 
 /** EP2 — look_for_identifiers.py:40-112 as one Spark job (SURVEY §3):
@@ -81,8 +82,7 @@ object Stage2 {
       .agg(min_by(struct(col("name"), col("category")), col("prio"))
         .as("info"))
       .groupBy("key")
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("preferred_curie"), col("info")))))
+      .agg(AggOps.matchMap(col("preferred_curie"), col("info"))
         .as("mechanistic_intermediate_nodes"))
 
     stage1.drop("mechanistic_intermediate_nodes")

@@ -218,7 +218,6 @@ object Components {
     var converged = false
     var r = 0
     while (!converged && r < maxRounds) {
-      val t0 = System.nanoTime()
       // localCheckpoint truncates BOTH lineages per round: the logical
       // plan (each star references its input twice — uncut, the tree
       // doubles every round) and the RDD dependency graph (uncut, the
@@ -232,9 +231,6 @@ object Components {
       e = round
       eFp = nextFp
       r += 1
-      if (sys.env.contains("GRAFT_PROFILE"))
-        System.err.println(f"[components] round $r: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s edges=${nextFp.head}")
     }
     if (!converged)
       // unreachable at the default budget on legal inputs (star

@@ -2,7 +2,8 @@ package graft.ner
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{AggOps, StringOps}
+import graft.ops.StringOps
+import graft.synonymizer.Synonymizer
 
 /** Deterministic re-specification of the reference's scispaCy NER stage
   * (NER.py:83-122, perform_NER.py:19-54; SURVEY §2.8 U1): text → KG2 node
@@ -61,54 +62,18 @@ final class DictionaryNer(nodes: DataFrame, clusters: DataFrame,
   def mentions(sentenceDf: DataFrame): DataFrame =
     DictionaryNer.mentions(sentenceDf, maxGram, minMentionChars)
 
-  /** text_to_kg2_nodes (perform_NER.py:19-54): per document, curie →
-    * {name = matched mention text, category}, category-filtered when
-    * `categories` is non-empty, longest-mention-wins per curie with the
-    * engine's deterministic tie-break (SURVEY §6.2).
-    * Output: (doc_key, curie, name, category).
+  /** Raw mention → dictionary links (see [[EntityLinker.hits]]): the
+    * RAW n-gram stream joins the dictionary with no pre-join distinct
+    * (see the scale notes above). For a dictionary too big to broadcast,
+    * dedup ahead of the sort-merge join with [[DictionaryNer.mentions]].
     */
-  def textToKg2Nodes(docs: DataFrame, keyCol: String, textCol: String,
-                     categories: Set[String] = Set.empty): DataFrame = {
-    // RAW (non-distinct) mention stream into the join: duplicate
-    // mentions cannot change the longest-wins/max aggregate below, and
-    // a pre-join distinct would shuffle the FULL n-gram stream (~120
-    // rows/doc — 22M rows at SCALECURVE's 200k-doc point, where it
-    // measured superlinear: 4x docs -> 6.8x wall from the spilling
-    // exchange) just to bound a join that is map-side anyway whenever
-    // the dictionary broadcasts. NGramsExpr already dedups within a
-    // sentence; cross-sentence duplicates ride through to the (tiny,
-    // hits-only) aggregate shuffle. For a dictionary too big to
-    // broadcast, dedup ahead of the sort-merge join with
-    // [[DictionaryNer.mentions]] explicitly.
-    val m = DictionaryNer.rawMentions(
+  protected def hits(docs: DataFrame, keyCol: String,
+                     textCol: String): DataFrame =
+    DictionaryNer.rawMentions(
         sentences(docs, keyCol, textCol), maxGram, minMentionChars)
       .withColumn("mention_key", StringOps.simplify(col("mention")))
       .filter(length(col("mention_key")) > 0)
-    val hits = m.join(dictionary, "mention_key")
-    DictionaryNer.filterAndMerge(hits, categories)
-  }
-
-  /** Fused multi-pass form (see [[EntityLinker.textToKg2NodesByPass]]):
-    * one mention/dictionary pipeline over the pass-tagged union, the
-    * per-pass category filters applied to the raw hits before the
-    * merge — row-identical to one [[textToKg2Nodes]] call per pass.
-    */
-  override def textToKg2NodesByPass(docs: DataFrame, keyCol: String,
-                                    textCol: String,
-                                    categoriesByPass: Map[String, Set[String]])
-      : DataFrame = {
-    // same empty-map contract as the trait default (which would throw
-    // from .reduce): all implementations fail loudly rather than one
-    // throwing and another returning an empty frame
-    require(categoriesByPass.nonEmpty,
-      "textToKg2NodesByPass needs at least one pass -> categories entry")
-    val m = DictionaryNer.rawMentions(
-        sentences(docs, keyCol, textCol), maxGram, minMentionChars)
-      .withColumn("mention_key", StringOps.simplify(col("mention")))
-      .filter(length(col("mention_key")) > 0)
-    val hits = m.join(dictionary, "mention_key")
-    DictionaryNer.filterAndMergeByPass(hits, categoriesByPass)
-  }
+      .join(dictionary, "mention_key")
 }
 
 object DictionaryNer {
@@ -137,13 +102,7 @@ object DictionaryNer {
     */
   private[ner] def dictionaryOf(nodes: DataFrame,
                                 clusters: DataFrame): DataFrame =
-    nodes.join(
-        broadcast(clusters.select(
-          col("cluster_id"),
-          col("name").as("preferred_name"),
-          StringOps.withPrefix("biolink:", col("category"))
-            .as("preferred_category"))),
-        "cluster_id")
+    nodes.join(broadcast(Synonymizer.preferred(clusters)), "cluster_id")
       .select(col("name_simplified").as("mention_key"),
               col("cluster_id").as("curie"),
               col("preferred_name"), col("preferred_category"))
@@ -157,40 +116,6 @@ object DictionaryNer {
       val bytes = nodes.queryExecution.optimizedPlan.stats.sizeInBytes
       if (bytes <= AutoBroadcastMaxBytes) broadcast(dict)
       else dict.hint("shuffle_hash")
-  }
-
-  /** Shared tail of text_to_kg2_nodes (perform_NER.py:34-53): category
-    * filter + per-(doc, curie) longest-mention-wins merge. Input needs
-    * (doc_key, curie, mention, preferred_category); duplicate hits are
-    * harmless — the aggregate is duplicate-insensitive.
-    */
-  private[ner] def filterAndMerge(hits: DataFrame,
-                                  categories: Set[String]): DataFrame = {
-    val filtered =
-      if (categories.isEmpty) hits
-      else hits.filter(col("preferred_category")
-        .isin(categories.toSeq.map(x => x: Any): _*))
-    filtered
-      .groupBy(col("doc_key"), col("curie"))
-      .agg(AggOps.longestWins(col("mention")).as("name"),
-           max(col("preferred_category")).as("category"))
-  }
-
-  /** [[filterAndMerge]] with a PASS-dependent category filter: the
-    * doc_key struct's `pass` field selects which category set gates the
-    * row, before the shared longest-wins merge — so one fused pipeline
-    * reproduces N per-pass calls row for row. A row whose pass is not
-    * in the map is dropped (callers tag every row they pass in).
-    */
-  private[ner] def filterAndMergeByPass(hits: DataFrame,
-      categoriesByPass: Map[String, Set[String]]): DataFrame = {
-    val pass = col("doc_key").getField("pass")
-    val pred = categoriesByPass.map { case (p, cats) =>
-      if (cats.isEmpty) pass === p
-      else pass === p &&
-        col("preferred_category").isin(cats.toSeq.map(x => x: Any): _*)
-    }.reduce(_ || _)
-    filterAndMerge(hits.filter(pred), Set.empty)
   }
 
   /** P2+P3+P4: text → gated, scrubbed sentences (perform_NER.py:22-28).
@@ -217,7 +142,7 @@ object DictionaryNer {
                minMentionChars: Int = 3): DataFrame =
     rawMentions(sentenceDf, maxGram, minMentionChars).distinct()
 
-  /** The pre-distinct mention stream — what [[DictionaryNer.textToKg2Nodes]]
+  /** The pre-distinct mention stream — what [[DictionaryNer.hits]]
     * joins (per-sentence-deduped by NGramsExpr; cross-sentence duplicates
     * left in, the consuming aggregate being duplicate-insensitive). */
   private[ner] def rawMentions(sentenceDf: DataFrame, maxGram: Int,

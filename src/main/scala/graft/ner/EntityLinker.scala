@@ -1,14 +1,18 @@
 package graft.ner
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.AggOps
 
 /** U1 — the entity-linking operator contract (SURVEY §2.8).
   *
   * The reference's NER stage is an interchangeable stack of five neural
   * pipelines behind one call surface (`text_to_kg2_nodes`,
   * perform_NER.py:19-54, configured at perform_NER.py:79-99); this trait
-  * is that surface for the Spark engine. Two implementations ship:
+  * is that surface for the Spark engine. A linker implements only
+  * [[hits]] — the raw mention → canonical-curie links — and inherits
+  * both entry points, which add the one category filter and
+  * longest-mention-wins merge. Two implementations ship:
   *
   *  - [[DictionaryNer]] — the deterministic dictionary re-specification
   *    (n-gram mentions joined against the synonymizer name dictionary);
@@ -20,43 +24,53 @@ import org.apache.spark.sql.functions._
   *    keeps the whole surrounding pipeline — Stage1/Stage2 take the
   *    trait, not a concrete matcher.
   *
-  * Output contract (both impls): (doc_key, curie, name, category) — one
-  * row per (document, canonical curie), `name` the longest matched
-  * mention text (A4 longest-wins, perform_NER.py:39-53), `category` the
-  * canonical cluster category.
+  * Output contract: (doc_key, curie, name, category) — one row per
+  * (document, canonical curie), `name` the longest matched mention text
+  * (A4 longest-wins, perform_NER.py:39-53), `category` the canonical
+  * cluster category.
   */
 trait EntityLinker {
+
+  /** Raw links: rows carrying (doc_key, curie, mention,
+    * preferred_category), one per (document, mention, candidate curie);
+    * `doc_key` is the value of `keyCol`. Other columns are ignored, and
+    * duplicates are allowed — the merge is duplicate-insensitive.
+    */
+  protected def hits(docs: DataFrame, keyCol: String,
+                     textCol: String): DataFrame
 
   /** text_to_kg2_nodes (perform_NER.py:19-54): per document, the
     * category-filtered canonical matches. `categories` empty = no filter.
     */
-  def textToKg2Nodes(docs: DataFrame, keyCol: String, textCol: String,
-                     categories: Set[String] = Set.empty): DataFrame
+  final def textToKg2Nodes(docs: DataFrame, keyCol: String, textCol: String,
+                           categories: Set[String] = Set.empty): DataFrame = {
+    val h = hits(docs, keyCol, textCol)
+    EntityLinker.merge(
+      if (categories.isEmpty) h
+      else h.filter(EntityLinker.inCategories(categories)))
+  }
 
-  /** Fused multi-pass linking (r19 optimization seam): `docs` rows are
-    * tagged with a pass label (`keyCol` must be a struct whose `pass`
-    * field names the pass), and each pass gets its own category filter
-    * — applied BEFORE the longest-wins merge, exactly as a separate
-    * [[textToKg2Nodes]] call would. One linking pipeline (sentences →
-    * mentions/model → dictionary join → merge) replaces one per pass:
-    * at scale that is one map pass + one hits aggregate instead of N,
-    * and the model adapter opens its models once. The default
-    * implementation is the unfused per-pass composition, so any custom
-    * linker stays correct without overriding.
+  /** Fused multi-pass linking: `docs` rows are tagged with a pass label
+    * (`keyCol` must be a struct whose `pass` field names the pass), and
+    * each pass gets its own category filter — applied BEFORE the
+    * longest-wins merge, exactly as a separate [[textToKg2Nodes]] call
+    * per pass would, so the output is row-identical to that union. One
+    * linking pipeline replaces one per pass: one map pass and one hits
+    * aggregate instead of N, and a model linker opens its models once.
+    * A row whose pass is not in the map is dropped.
     */
-  def textToKg2NodesByPass(docs: DataFrame, keyCol: String, textCol: String,
-                           categoriesByPass: Map[String, Set[String]])
+  final def textToKg2NodesByPass(docs: DataFrame, keyCol: String,
+                                 textCol: String,
+                                 categoriesByPass: Map[String, Set[String]])
       : DataFrame = {
-    // explicit guard: .reduce on an empty map would throw a bare
-    // UnsupportedOperationException here while the fused overrides
-    // return an empty frame via their pass predicate — all
-    // implementations must agree on the edge case, loudly
     require(categoriesByPass.nonEmpty,
       "textToKg2NodesByPass needs at least one pass -> categories entry")
-    categoriesByPass.toSeq.sortBy(_._1).map { case (p, cats) =>
-      textToKg2Nodes(docs.filter(col(keyCol).getField("pass") === p),
-        keyCol, textCol, cats)
-    }.reduce(_.unionByName(_))
+    val pass = col("doc_key").getField("pass")
+    val keep = categoriesByPass.map { case (p, cats) =>
+      if (cats.isEmpty) pass === p
+      else pass === p && EntityLinker.inCategories(cats)
+    }.reduce(_ || _)
+    EntityLinker.merge(hits(docs, keyCol, textCol).filter(keep))
   }
 
   /** Map-form result (`indication_NER_aligned` /
@@ -64,13 +78,26 @@ trait EntityLinker {
     * doc_key → map<curie, struct<name, category>> with deterministically
     * sorted keys.
     */
-  def asMap(matches: DataFrame): DataFrame =
+  final def asMap(matches: DataFrame): DataFrame =
     matches
       .groupBy("doc_key")
-      .agg(map_from_entries(sort_array(collect_list(struct(
-        col("curie"),
-        struct(col("name"), col("category")).as("info")))))
-        .as("matches"))
+      .agg(AggOps.matchMap(col("curie"),
+        struct(col("name"), col("category")).as("info")).as("matches"))
+}
+
+object EntityLinker {
+
+  private def inCategories(categories: Set[String]): Column =
+    col("preferred_category").isin(categories.toSeq.map(x => x: Any): _*)
+
+  /** Shared tail of text_to_kg2_nodes (perform_NER.py:34-53): the
+    * per-(doc, curie) longest-mention-wins merge.
+    */
+  private def merge(hits: DataFrame): DataFrame =
+    hits
+      .groupBy(col("doc_key"), col("curie"))
+      .agg(AggOps.longestWins(col("mention")).as("name"),
+           max(col("preferred_category")).as("category"))
 }
 
 /** Model configuration, mirroring the reference's pipe-config surface

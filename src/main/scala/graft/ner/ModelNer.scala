@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import graft.ops.StringOps
+import graft.synonymizer.Synonymizer
 
 /** U1 escape hatch — the external-model entity linker
   * (NER.py:42-51, 102-108; perform_NER.py:79-99; SURVEY §2.8).
@@ -34,7 +35,8 @@ import graft.ops.StringOps
   *    dictionary matcher's multi-candidate semantics so the two linkers
   *    agree on name resolution;
   *  - the tail (category filter + longest-mention-wins per curie) is the
-  *    SHARED [[DictionaryNer.filterAndMerge]].
+  *    one [[EntityLinker]] merge; this class implements only
+  *    [[EntityLinker.hits]].
   *
   * Scale shape: the model stage is map-side (one pass over sentences, no
   * shuffle); the only shuffles are the canonicalization join (lookup
@@ -65,11 +67,7 @@ final class ModelNer(nodes: DataFrame, clusters: DataFrame,
     *    (name, cluster) — multi-candidate like the dictionary matcher.
     */
   private val lookup: DataFrame = {
-    val preferred = broadcast(clusters.select(
-      col("cluster_id"),
-      col("name").as("preferred_name"),
-      StringOps.withPrefix("biolink:", col("category"))
-        .as("preferred_category")))
+    val preferred = broadcast(Synonymizer.preferred(clusters))
     val members = nodes
       .groupBy(col("id_simplified"))
       .agg(min(col("cluster_id")).as("cluster_id"))
@@ -83,16 +81,13 @@ final class ModelNer(nodes: DataFrame, clusters: DataFrame,
     DictionaryNer.distribute(members.unionByName(names), nodes, dictBuild)
   }
 
-  def textToKg2Nodes(docs: DataFrame, keyCol: String, textCol: String,
-                     categories: Set[String] = Set.empty): DataFrame =
-    DictionaryNer.filterAndMerge(rawHits(docs, keyCol, textCol), categories)
-
-  /** The shared model pipeline up to (doc_key, curie, mention,
-    * preferred_category) hits — factored so the fused multi-pass entry
-    * reuses one model pass.
+  /** The model pipeline up to (doc_key, curie, mention,
+    * preferred_category) hits (see [[EntityLinker.hits]]): ONE
+    * mapPartitions model pass, so a fused multi-pass call opens the
+    * models once per partition, not once per pass.
     */
-  private def rawHits(docs: DataFrame, keyCol: String,
-                      textCol: String): DataFrame = {
+  protected def hits(docs: DataFrame, keyCol: String,
+                     textCol: String): DataFrame = {
     val sents = DictionaryNer.sentences(docs, keyCol, textCol)
     val keyField = sents.schema("doc_key")
     val outSchema = StructType(Seq(
@@ -138,25 +133,6 @@ final class ModelNer(nodes: DataFrame, clusters: DataFrame,
     keyed.join(lookup, "link_key")
       .select(col("doc_key"), col("curie"), col("mention"),
               col("preferred_category"))
-  }
-
-  /** Fused multi-pass form (see [[EntityLinker.textToKg2NodesByPass]]):
-    * ONE mapPartitions model pass over the pass-tagged union — the
-    * models open once per partition instead of once per pass — with the
-    * per-pass category filters applied to the raw hits before the
-    * shared merge; row-identical to one [[textToKg2Nodes]] call per
-    * pass.
-    */
-  override def textToKg2NodesByPass(docs: DataFrame, keyCol: String,
-                                    textCol: String,
-                                    categoriesByPass: Map[String, Set[String]])
-      : DataFrame = {
-    // same empty-map contract as the trait default (which would throw
-    // from .reduce) — see the DictionaryNer override
-    require(categoriesByPass.nonEmpty,
-      "textToKg2NodesByPass needs at least one pass -> categories entry")
-    DictionaryNer.filterAndMergeByPass(
-      rawHits(docs, keyCol, textCol), categoriesByPass)
   }
 }
 

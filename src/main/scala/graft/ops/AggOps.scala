@@ -51,6 +51,14 @@ object AggOps {
   def longestWins(name: Column): Column =
     max_by(name, struct(length(name), name))
 
+  /** Per-key match map, the shape of `indication_NER_aligned` and
+    * `mechanistic_intermediate_nodes` (perform_NER.py:119-134,
+    * look_for_identifiers.py:86-105): map<curie, info> with sorted keys,
+    * so the map is deterministic whatever the shuffle order.
+    */
+  def matchMap(curie: Column, info: Column): Column =
+    map_from_entries(sort_array(collect_list(struct(curie, info))))
+
   /** Exact per-group discrete quantiles, engine-independent: the q-th
     * quantile is the value at sorted rank ceil(q*n) (ties split by
     * `tieCol`, so the picked ROW is deterministic, not just the value).

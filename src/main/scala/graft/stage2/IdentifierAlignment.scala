@@ -72,15 +72,4 @@ final class IdentifierAlignment(syn: Synonymizer) {
     */
   def mechanisticNodes(names: DataFrame, ids: DataFrame): DataFrame =
     alignNames(names).unionByName(alignIds(ids)).distinct()
-
-  /** Map-form (`mechanistic_intermediate_nodes` shape): key →
-    * map<curie, struct<name, category>> with sorted keys.
-    */
-  def asMap(aligned: DataFrame): DataFrame =
-    aligned
-      .groupBy("key")
-      .agg(map_from_entries(sort_array(collect_list(struct(
-        col("preferred_curie"),
-        struct(col("name"), col("category")).as("info")))))
-        .as("mechanistic_intermediate_nodes"))
 }

@@ -62,6 +62,20 @@ object Synonymizer {
     require(salt >= 1 && salt <= 1024, "sane salt fanout")
   }
 
+  /** Preferred-triple projection of a cluster (node_synonymizer.py:393-398):
+    * (cluster_id, preferred_curie, preferred_name, preferred_category) —
+    * the cluster id is the canonical curie; category gets the biolink:
+    * prefix (node_synonymizer.py:363-368). The lookups here and both NER
+    * linkers' dictionaries all project clusters through this function.
+    */
+  def preferred(clusters: DataFrame): DataFrame =
+    clusters.select(
+      col("cluster_id"),
+      col("cluster_id").as("preferred_curie"),
+      col("name").as("preferred_name"),
+      StringOps.withPrefix("biolink:", col("category"))
+        .as("preferred_category"))
+
   def fromRawDump(nodes: DataFrame, clustersRaw: DataFrame,
                   edges: DataFrame): Synonymizer =
     new Synonymizer(
@@ -101,18 +115,6 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
                         probeJoin: Synonymizer.ProbeJoin =
                           Synonymizer.BroadcastProbe) {
 
-  /** Preferred-triple projection of a cluster (node_synonymizer.py:393-398):
-    * the cluster id is the canonical curie; category gets the biolink:
-    * prefix (node_synonymizer.py:363-368).
-    */
-  private def preferred(c: DataFrame): DataFrame =
-    c.select(
-      col("cluster_id"),
-      col("cluster_id").as("preferred_curie"),
-      col("name").as("preferred_name"),
-      StringOps.withPrefix("biolink:", col("category"))
-        .as("preferred_category"))
-
   /** Broadcast hint gated on the probe-join mode: BroadcastProbe's
     * contract is bounded probe batches AND a cluster table that fits a
     * broadcast; ShuffleProbe exists precisely because neither holds at
@@ -126,7 +128,8 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
     case _ => df
   }
 
-  private val clustersPreferred = maybeBroadcast(preferred(clusters))
+  private val clustersPreferred =
+    maybeBroadcast(Synonymizer.preferred(clusters))
 
   /** Distinct probe rows: input plus its normalized lookup key. */
   private def curieProbe(inputs: DataFrame): DataFrame =
@@ -212,12 +215,10 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
   private def withPreferred(resolved0: DataFrame, inputs: DataFrame,
                             returnAllCategories: Boolean = false): DataFrame = {
     // two consumers when returnAllCategories (preferred join + histogram):
-    // persist the narrow (input, cluster_id) frame so the resolve joins
+    // checkpoint the narrow (input, cluster_id) frame so the resolve joins
     // against the nodes table run once, not per branch
     val resolved =
-      if (returnAllCategories)
-        resolved0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (returnAllCategories) resolved0.localCheckpoint(eager = true)
       else resolved0
     val joined = inputs.select(col("input")).distinct()
       .join(resolved.join(clustersPreferred, "cluster_id"), Seq("input"), "left")
@@ -249,18 +250,21 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
   private def resolveFallback(inputs: DataFrame): DataFrame = {
     // byCurie feeds both the union and the miss left_anti; the union is
     // consumed from up to four branches in normalizerResults. Both are
-    // narrow (input, cluster_id) frames — persist so each full resolve
-    // (two aggregated joins into the nodes scan) runs exactly once.
-    val byCurie = clusterByCurie(inputs).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // narrow (input, cluster_id) frames — checkpoint so each full resolve
+    // (two aggregated joins into the nodes scan) runs exactly once. An
+    // eager local checkpoint, unlike persist, registers nothing in the
+    // CacheManager: its blocks live only while the returned frame is
+    // referenced, so repeated lookups in one session leak no entries.
+    val byCurie = clusterByCurie(inputs).localCheckpoint(eager = true)
     val misses = inputs.select(col("input")).distinct()
       .join(byCurie, Seq("input"), "left_anti")
-    byCurie.unionByName(clusterByName(misses)).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    byCurie.unionByName(clusterByName(misses))
+      .localCheckpoint(eager = true)
   }
 
   /** get_canonical_curies with curie-else-name fallback
-    * (node_synonymizer.py:229-234; CLI :468-477).
+    * (node_synonymizer.py:229-234; CLI :468-477). The resolve runs
+    * eagerly, inside this call (see resolveFallback).
     */
   def canonicalCuriesFallback(inputs: DataFrame,
                               returnAllCategories: Boolean = false): DataFrame =
@@ -327,18 +331,6 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
     val distinctInputs = inputs.select(col("input")).distinct()
     val resolved = resolveFallback(inputs)
 
-    // consumed by both the per-member assembly and the histogram below —
-    // persist so the member explode + nodes join runs once
-    val memberRows = resolved
-      .join(maybeBroadcast(
-              clusters.select(col("cluster_id"), col("member_ids"))),
-            "cluster_id")
-      .select(col("input"), col("cluster_id"),
-              explode(col("member_ids")).as("member_id"))
-      .join(nodes.withColumnRenamed("cluster_id", "node_cluster_id"),
-            col("member_id") === nodes("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     // representative node = the node whose id IS the cluster id
     // (node_synonymizer.py:262: cluster_rep = nodes_dict[cluster_id]);
     // probe-sized resolved side broadcast into the nodes scan
@@ -359,6 +351,18 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
         .select(col("input"), col("preferred_curie"), col("preferred_name"),
           coalesce(col("rep_category"), col("preferred_category"))
             .as("preferred_category"))
+
+    // consumed by both the per-member assembly and the histogram below —
+    // checkpoint so the member explode + nodes join runs once
+    val memberRows = resolved
+      .join(maybeBroadcast(
+              clusters.select(col("cluster_id"), col("member_ids"))),
+            "cluster_id")
+      .select(col("input"), col("cluster_id"),
+              explode(col("member_ids")).as("member_id"))
+      .join(nodes.withColumnRenamed("cluster_id", "node_cluster_id"),
+            col("member_id") === nodes("id"))
+      .localCheckpoint(eager = true)
 
     val assembled = memberRows
       .groupBy(col("input"), col("cluster_id"))

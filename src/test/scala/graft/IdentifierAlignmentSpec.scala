@@ -52,8 +52,13 @@ class IdentifierAlignmentSpec extends SparkTestBase {
   }
 
   test("map-form mechanistic_intermediate_nodes shape") {
-    val m = align.asMap(align.mechanisticNodes(
-        namesDf("d1" -> "Aspirin"), idsDf("d1" -> "C00001"))).collect()
+    import org.apache.spark.sql.functions.{col, struct}
+    val m = align.mechanisticNodes(
+        namesDf("d1" -> "Aspirin"), idsDf("d1" -> "C00001"))
+      .groupBy("key")
+      .agg(graft.ops.AggOps.matchMap(col("preferred_curie"),
+        struct(col("name"), col("category")).as("info")))
+      .collect()
     assert(m.length == 1)
     val map = m.head.getMap[String, org.apache.spark.sql.Row](1)
     assert(map.keySet == Set("CHEBI:15365", "CHEBI:15377"))

@@ -293,4 +293,31 @@ class SynonymizerSpec extends SparkTestBase {
     assert(plan.contains("psalt") && plan.contains("nsalt"),
       s"salted name-join keys missing from plan:\n$plan")
   }
+
+  test("lookups leave no cache entry behind: four calls of each " +
+       "fallback / all-categories / normalizer operation keep the " +
+       "CacheManager empty") {
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val in = TestFixtures.inputsDf(spark,
+      Seq("aspirin", "chebi:15365", "Asthma", "zzz"))
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "canonicalCuriesFallback" -> (() => syn.canonicalCuriesFallback(in)),
+      "canonicalCuriesFallback(all categories)" ->
+        (() => syn.canonicalCuriesFallback(in, returnAllCategories = true)),
+      "canonicalCuriesByCurie(all categories)" ->
+        (() => syn.canonicalCuriesByCurie(in, returnAllCategories = true)),
+      "canonicalCuriesByName(all categories)" ->
+        (() => syn.canonicalCuriesByName(in, returnAllCategories = true)),
+      "equivalentNodesFallback" -> (() => syn.equivalentNodesFallback(in)),
+      "normalizerResults(full)" -> (() => syn.normalizerResults(in)),
+      "normalizerResults(minimal)" ->
+        (() => syn.normalizerResults(in, outputFormat = "minimal")))
+    ops.foreach { case (name, op) =>
+      (1 to 4).foreach(_ => assert(op().collect().length == 4))
+      assert(cacheManager.isEmpty, s"$name left cache entries behind")
+    }
+  }
 }
