@@ -361,6 +361,17 @@ object TextDedup {
     withShingles(docs, idCol, textCol, shingleN).select(col("id"),
       explode(graft.functions.MinHashBands(col("sh"), k, bands)).as("band"))
 
+  /** The band-index rows of an already-shingled frame ((id, sh) from
+    * [[withShingles]]) — [[bandIndexOf]] minus the shingle pass, for
+    * callers that stage the shingles once and feed several consumers
+    * (the streaming ingest computes ONE staged pair per micro-batch
+    * and routes it to both the flag join and the band-index sink).
+    */
+  def bandIndexFromShingles(sh: DataFrame, k: Int = 8,
+                            bands: Int = 4): DataFrame =
+    sh.select(col("id"),
+      explode(graft.functions.MinHashBands(col("sh"), k, bands)).as("band"))
+
   /** [[incrementalNearDups]] against a PRECOMPUTED historical band index
     * — the true steady-state ingest shape. The text-taking variant
     * re-shingles the whole accumulated corpus every batch (O(corpus)
@@ -380,17 +391,6 @@ object TextDedup {
     * @param hist      the corresponding (idCol, textCol) corpus rows,
     *                  read only for candidate verification
     */
-  /** The band-index rows of an already-shingled frame ((id, sh) from
-    * [[withShingles]]) — [[bandIndexOf]] minus the shingle pass, for
-    * callers that stage the shingles once and feed several consumers
-    * (the streaming ingest computes ONE staged pair per micro-batch
-    * and routes it to both the flag join and the band-index sink).
-    */
-  def bandIndexFromShingles(sh: DataFrame, k: Int = 8,
-                            bands: Int = 4): DataFrame =
-    sh.select(col("id"),
-      explode(graft.functions.MinHashBands(col("sh"), k, bands)).as("band"))
-
   def incrementalNearDupsIndexed(newDocs: DataFrame, histIndex: DataFrame,
                                  hist: DataFrame, idCol: String,
                                  textCol: String, threshold: Double,
@@ -401,28 +401,22 @@ object TextDedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newBands = bandIndexFromShingles(newSh, k, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    incrementalNearDupsIndexedStaged(newSh, newBands, histIndex, hist,
-      idCol, textCol, threshold, maxBucket)
+    incrementalNearDupsIndexedStaged(newSh,
+      indexedCandidates(newBands, histIndex, maxBucket)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      hist, idCol, textCol, threshold, shingleN)
   }
 
-  /** [[incrementalNearDupsIndexed]] over a caller-staged batch:
-    * `newSh` = the batch's [[withShingles]] frame, `newBands` = its
-    * [[bandIndexFromShingles]] rows, both persisted by the caller (they
-    * are consumed more than once below). The streaming ingest entry
-    * point: the SAME staged pair also feeds the band-index sink, so the
-    * batch is shingled exactly once per micro-batch by construction
-    * (r19 relied on CacheManager plan-dedup to collapse the sink's
-    * separate [[bandIndexOf]] onto the flag path's cached frames; this
-    * makes the reuse explicit). `newBands` must be built from `newSh`
-    * with the SAME k/bands as the accumulated `histIndex` — mismatched
-    * parameters silently produce disjoint band keys and zero candidates.
+  /** The (id, hist_id) candidate pairs of a batch's band rows against
+    * the accumulated `histIndex`: the band join of
+    * [[incrementalNearDupsIndexed]], before verification. `newBands`
+    * must be built with the SAME k/bands as `histIndex` — mismatched
+    * parameters silently produce disjoint band keys and zero
+    * candidates. Not persisted: the caller stages it (it is consumed
+    * twice by [[incrementalNearDupsIndexedStaged]]) and releases it.
     */
-  def incrementalNearDupsIndexedStaged(newSh: DataFrame, newBands: DataFrame,
-                                       histIndex: DataFrame, hist: DataFrame,
-                                       idCol: String, textCol: String,
-                                       threshold: Double,
-                                       maxBucket: Int = defaultMaxBucket,
-                                       shingleN: Int = 3): DataFrame = {
+  def indexedCandidates(newBands: DataFrame, histIndex: DataFrame,
+                        maxBucket: Int = defaultMaxBucket): DataFrame = {
     // prune the history index to bands the BATCH actually holds before
     // anything else: the batch's distinct band set is bounded by
     // batch×bands (broadcastable by construction), and every history row
@@ -442,13 +436,26 @@ object TextDedup {
       .withColumn("rep", min(col("id")).over(w))
       .filter(col("bsize") <= maxBucket || col("id") === col("rep"))
       .select(col("id").as("hist_id"), col("band"))
-    // persisted: consumed twice (the verification join and the matched-
-    // id broadcast below) — without it the band join re-runs per branch
-    val cands = newBands
+    newBands
       .join(histBands, "band")
       .select(col("id"), col("hist_id"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** [[incrementalNearDupsIndexed]] over caller-staged frames: `newSh`
+    * = the batch's [[withShingles]] frame (shingled with `shingleN`)
+    * and `cands` = its [[indexedCandidates]], both persisted by the
+    * caller, which releases them once the result is written. The
+    * streaming ingest entry point: the SAME staged shingles also feed
+    * the band-index sink, so the batch is shingled exactly once per
+    * micro-batch by construction. History docs are re-shingled with
+    * the same `shingleN` for verification.
+    */
+  def incrementalNearDupsIndexedStaged(newSh: DataFrame, cands: DataFrame,
+                                       hist: DataFrame,
+                                       idCol: String, textCol: String,
+                                       threshold: Double,
+                                       shingleN: Int = 3): DataFrame = {
     val newSets = newSh
       .select(col("id"), array_distinct(col("sh")).as("set_a"))
       .hint("shuffle_hash")

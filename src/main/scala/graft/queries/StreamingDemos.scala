@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, md5, pmod, substring}
+import graft.extensions.{Ivf, Kmeans}
 import graft.streaming.{DocsStream, EventsStream, SpikeStream, VecsStream}
-import graft.tables.Tables
+import graft.tables.{CorpusMemo, ParquetArtifact, Tables}
 
 /** Streaming-shaped demo: the tumbling-window aggregation registered in
   * its batch form (identical transform feeds the Structured Streaming
@@ -14,36 +15,47 @@ object StreamingDemos {
 
   // the frozen index's per-cell history error profile is an OFFLINE
   // artifact (computed once when the index is fitted, like the centroids
-  // themselves) — k rows, memoized per corpus content stamp (not dir
-  // path) so repeated registry executions don't re-scan the history
-  // corpus AND a mid-session testdata regeneration invalidates it
-  private val ivfHistStatsCache =
-    new graft.tables.CorpusMemo[Seq[(Int, Long, Long)]]("embeddings")
+  // themselves) — k rows, so repeated registry executions don't re-scan
+  // the history corpus
+  private val ivfHistStats =
+    new CorpusMemo[Seq[(Int, Long, Long)]]("embeddings")((s, dir) => {
+      val index = PipelineDemos.ivfHistIndex(s, dir)
+      Ivf.cellStats(Ivf.assign(PipelineDemos.embeddingsHist(s, dir),
+          "vec_id", "embedding", index), index)
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    })
 
-  // landed framed-training state parquet per corpus stamp
-  // (stream_kmeans_ingest_framed): the offline artifact the framed
-  // streaming ingest boots from, written once per corpus
-  private val kmeansState0PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
+  // landed framed-training state (stream_kmeans_ingest_framed): the
+  // offline artifact the framed streaming ingest boots from
+  private val kmeansState0 = new ParquetArtifact("kmstate0", "embeddings")(
+    (s, dir) => Kmeans.lloydFramedState(PipelineDemos.embeddingsHist(s, dir),
+      "vec_id", "embedding", k = 8, rounds = 3, nSupers = 1),
+    ParquetArtifact.overwriteAndRelease)
 
   // frozen framed routing over the HISTORY-trained model
-  // (stream_semdedup_ingest) — session-gated, since it holds a frame
-  private val semdedupRoutingCache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting](
-      "embeddings")
+  // (stream_semdedup_ingest)
+  private val semdedupRouting =
+    PipelineDemos.framedRouting(PipelineDemos.kmeansHist)(
+      Kmeans.framedRoutingFor(_, "cluster", "cv", nSupers = 3))(_.members)
 
-  // landed history stage parquet (id, v, nrm, cluster, dq) the
-  // semdedup ingest flags its first batch against — written once
-  private val semdedupStage0PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
+  // landed history stage (id, v, nrm, cluster, dq) the semdedup ingest
+  // flags its first batch against
+  private val semdedupStage0 = new ParquetArtifact("sdstage0", "embeddings")(
+    (s, dir) => Kmeans.semStageFramed(PipelineDemos.embeddingsHist(s, dir),
+      "vec_id", "embedding", semdedupRouting(s, dir)),
+    ParquetArtifact.overwriteAndRelease)
 
   // frozen THREE-LEVEL routing + its landed history stage
-  // (stream_semdedup_ingest3) — the r17 #5 bounded-row ingest path
-  private val semdedupRouting3Cache =
-    new graft.tables.CorpusMemo[graft.extensions.Kmeans.FramedRouting3](
-      "embeddings")
-  private val semdedupStage30PathCache =
-    new graft.tables.CorpusMemo[String]("embeddings")
+  // (stream_semdedup_ingest3) — the bounded-row ingest path
+  private val semdedupRouting3 =
+    PipelineDemos.framedRouting(PipelineDemos.kmeansHist)(
+      Kmeans.framedRoutingFor3(_, "cluster", "cv", nSupers = 2, nMids = 2))(
+      _.members)
+  private val semdedupStage30 = new ParquetArtifact("sd3stage0", "embeddings")(
+    (s, dir) => Kmeans.semStageFramed3(PipelineDemos.embeddingsHist(s, dir),
+      "vec_id", "embedding", semdedupRouting3(s, dir)),
+    ParquetArtifact.overwriteAndRelease)
 
   private def deleteDir(path: String): Unit = {
     def rm(f: java.io.File): Unit = {
@@ -176,16 +188,8 @@ object StreamingDemos {
     // per-batch drift flag) arithmetically.
     "stream_ivf_ingest" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val index = PipelineDemos.ivfHistIndexCache.getOrElseUpdate(dir,
-        graft.extensions.Ivf.trainDeterministic(hist, "vec_id", "embedding",
-          k = 8))
-      val histRows = ivfHistStatsCache.getOrElseUpdate(dir,
-        graft.extensions.Ivf.cellStats(
-            graft.extensions.Ivf.assign(hist, "vec_id", "embedding", index),
-            index)
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq)
+      val index = PipelineDemos.ivfHistIndex(s, dir)
+      val histRows = ivfHistStats(s, dir)
       val histStats = {
         import s.implicits._
         histRows.toDF("cell", "n", "sum_qerr_q")
@@ -218,10 +222,7 @@ object StreamingDemos {
     // batch-1 assignment under the UPDATED centroids, batch-1 merge.
     "stream_kmeans_ingest" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
+      val m = PipelineDemos.kmeansHist(s, dir)
       val base = graft.tables.ScratchDirs.tmp("kmingest", dir)
       // fresh sink dir: correctness relies on exactly batches {0, 1}
       // existing (same stance as stream_ivf_ingest)
@@ -246,15 +247,7 @@ object StreamingDemos {
     // the same evolving-state oracle.
     "stream_kmeans_ingest_framed" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val state0 = kmeansState0PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("kmstate0", dir)
-        val st = graft.extensions.Kmeans.lloydFramedState(
-          e.filter(pmod(col("vec_id"), lit(4L)) < 3L),
-          "vec_id", "embedding", k = 8, rounds = 3, nSupers = 1)
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
+      val state0 = kmeansState0.path(s, dir)
       val base = graft.tables.ScratchDirs.tmp("kmingestf", dir)
       // fresh sink dir: correctness relies on exactly batches {0, 1}
       // existing (same stance as stream_kmeans_ingest)
@@ -280,23 +273,8 @@ object StreamingDemos {
     // joins end-to-end.
     "stream_semdedup_ingest" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      val routing = semdedupRoutingCache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 3))
-      val stage0 = semdedupStage0PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("sdstage0", dir)
-        val st = graft.extensions.Kmeans.semStageFramed(
-          hist, "vec_id", "embedding", routing)
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
+      val routing = semdedupRouting(s, dir)
+      val stage0 = semdedupStage0.path(s, dir)
       val base = graft.tables.ScratchDirs.tmp("sdingest", dir)
       // fresh sink dirs: correctness relies on exactly batches {0, 1}
       // existing (same stance as stream_kmeans_ingest)
@@ -323,23 +301,8 @@ object StreamingDemos {
     // stagings through super → mid → leaf, and both flag joins.
     "stream_semdedup_ingest3" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val hist = e.filter(pmod(col("vec_id"), lit(4L)) < 3L)
-      val m = PipelineDemos.kmeansHistCache.getOrElseUpdate(dir,
-        graft.extensions.Kmeans.lloyd(hist, "vec_id", "embedding",
-          k = 8, rounds = 3))
-      val routing = semdedupRouting3Cache.getOrElseValid(dir,
-          _.members.sparkSession eq s)(
-        graft.extensions.Kmeans.framedRoutingFor3(
-          graft.extensions.Kmeans.lastCentroidsFrame(s, m),
-          "cluster", "cv", nSupers = 2, nMids = 2))
-      val stage0 = semdedupStage30PathCache.getOrElseUpdate(dir, {
-        val path = graft.tables.ScratchDirs.tmp("sd3stage0", dir)
-        val st = graft.extensions.Kmeans.semStageFramed3(
-          hist, "vec_id", "embedding", routing)
-        st.write.mode("overwrite").parquet(path)
-        st.unpersist(false)
-        path
-      })
+      val routing = semdedupRouting3(s, dir)
+      val stage0 = semdedupStage30.path(s, dir)
       val base = graft.tables.ScratchDirs.tmp("sd3ingest", dir)
       deleteDir(s"$base/stage")
       deleteDir(s"$base/flags")

@@ -147,23 +147,23 @@ object DocsStream {
         .map(_.getPath.getName.stripPrefix("batch=").toLong)
         .filter(_ < batchId)
     // three actions follow (flags + bands + history writes): persist so
-    // the micro-batch source is not fetched once per sink
-    batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the micro-batch source is not fetched once per sink. ONE staged
+    // shingle/band pair per micro-batch is shared by BOTH the flag join
+    // and the band-index sink (on batch 0, where the flag path never
+    // runs, it still saves the sink's own shingle pass), and the
+    // candidate pairs feed the flag join twice. Every staged frame is
+    // released once the three sinks are written: a long-running stream
+    // must not keep one cache entry per frame per batch.
+    import graft.extensions.TextDedup
+    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stage(f: DataFrame): DataFrame = {
+      staged += f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      f
+    }
     try {
-      // ONE staged shingle/band pair per micro-batch, shared by BOTH
-      // the flag join and the band-index sink (r20, VERDICT r19 #3:
-      // previously the sink called bandIndexOf separately and relied on
-      // CacheManager plan-dedup to collapse it onto the flag path's
-      // cached frames — explicit sharing, and on batch 0, where the
-      // flag path never ran, it saves the sink's own shingle pass
-      // recomputation outright). Session-persisted like the frames the
-      // staged flagger owns — CacheManager dedups re-executions over
-      // the same batch plan.
-      import graft.extensions.TextDedup
-      val newSh = TextDedup.withShingles(batch, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val newBands = TextDedup.bandIndexFromShingles(newSh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      stage(batch)
+      val newSh = stage(TextDedup.withShingles(batch, "doc_id", "text"))
+      val newBands = stage(TextDedup.bandIndexFromShingles(newSh))
       // read-back schemas are KNOWN (the history/band dirs hold exactly
       // what this body wrote on earlier batches — the same stream's row
       // shape): declaring them skips one parquet footer-inference job
@@ -176,15 +176,15 @@ object DocsStream {
             .withColumn("n_matches", lit(0L))
             .withColumn("best_jaccard", lit(0.0))
         else
-          TextDedup.incrementalNearDupsIndexedStaged(
-            newSh, newBands,
-            spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("doc_id",
-                  batch.schema("doc_id").dataType),
-                org.apache.spark.sql.types.StructField("band",
-                  newBands.schema("band").dataType))))
-              .parquet(priorIds.map(i => s"$bandsDir/batch=$i"): _*)
-              .select(col("doc_id").as("id"), col("band")),
+          TextDedup.incrementalNearDupsIndexedStaged(newSh,
+            stage(TextDedup.indexedCandidates(newBands,
+              spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
+                  org.apache.spark.sql.types.StructField("doc_id",
+                    batch.schema("doc_id").dataType),
+                  org.apache.spark.sql.types.StructField("band",
+                    newBands.schema("band").dataType))))
+                .parquet(priorIds.map(i => s"$bandsDir/batch=$i"): _*)
+                .select(col("doc_id").as("id"), col("band")))),
             spark.read.schema(batch.schema)
               .parquet(priorIds.map(i => s"$histDir/batch=$i"): _*)
               .select("doc_id", "text"),
@@ -193,7 +193,7 @@ object DocsStream {
       newBands.select(col("id").as("doc_id"), col("band"))
         .write.mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
       batch.write.mode("overwrite").parquet(s"$histDir/batch=$batchId")
-    } finally batch.unpersist()
+    } finally staged.foreach(_.unpersist())
     ()
   }
 

@@ -193,24 +193,32 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
         .as("cluster_id"))
   }
 
-  /** Per-cluster member-category histogram, biolink:-prefixed keys with
-    * null categories keyed "null" (node_synonymizer.py:121-141: one extra
-    * query over nodes for the resolved clusters, counts per member
-    * category). The resolved side is probe-sized → broadcast into the
-    * nodes scan; the map is assembled sorted for determinism.
+  /** Member-category histogram of `rows` per `keyCol`, as the map
+    * column `name`: biolink:-prefixed keys with null categories keyed
+    * "null", member counts as values, assembled sorted for determinism.
     */
-  private def allCategories(resolved: DataFrame): DataFrame =
-    nodes
-      .join(maybeBroadcast(resolved.select("cluster_id").distinct()),
-            "cluster_id")
-      .groupBy(col("cluster_id"),
+  private def categoryHistogram(rows: DataFrame, keyCol: String,
+                                name: String): DataFrame =
+    rows
+      .groupBy(col(keyCol),
         coalesce(StringOps.withPrefix("biolink:", col("category")),
                  lit("null")).as("cat"))
       .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("cluster_id"))
+      .groupBy(col(keyCol))
       .agg(map_from_entries(
         sort_array(collect_list(struct(col("cat"), col("cnt")))))
-        .as("all_categories"))
+        .as(name))
+
+  /** Per-cluster member-category histogram (node_synonymizer.py:121-141:
+    * one extra query over nodes for the resolved clusters, counts per
+    * member category). The resolved side is probe-sized → broadcast
+    * into the nodes scan.
+    */
+  private def allCategories(resolved: DataFrame): DataFrame =
+    categoryHistogram(
+      nodes.join(maybeBroadcast(resolved.select("cluster_id").distinct()),
+        "cluster_id"),
+      "cluster_id", "all_categories")
 
   private def withPreferred(resolved0: DataFrame, inputs: DataFrame,
                             returnAllCategories: Boolean = false): DataFrame = {
@@ -379,15 +387,7 @@ final class Synonymizer(nodes: DataFrame, clusters: DataFrame,
         col("cluster_id").as("preferred_curie"),
         expr("transform(sorted, x -> x.node)").as("nodes"))
 
-    val histo = memberRows
-      .groupBy(col("input"),
-        coalesce(StringOps.withPrefix("biolink:", col("category")),
-                 lit("null")).as("cat"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("input"))
-      .agg(map_from_entries(sort_array(collect_list(
-        struct(col("cat"), col("cnt")))))
-        .as("categories"))
+    val histo = categoryHistogram(memberRows, "input", "categories")
 
     distinctInputs
       .join(resolved.select(col("input"), col("cluster_id")),

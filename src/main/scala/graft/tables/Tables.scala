@@ -282,38 +282,41 @@ object Tables {
   }
 }
 
-/** Per-corpus memo for offline artifacts (frozen indexes, Bloom
-  * filters, history stats): callers key by the sf dir, but entries are
-  * stored under [[Tables.contentStamp]] of the backing table, so a
-  * driver-side regeneration of the parquet mid-session starts a fresh
-  * entry instead of serving an index fitted to data that no longer
-  * exists.
+/** One per-corpus offline artifact (a frozen index, a Bloom filter,
+  * history stats, a catalog table name): `build(s, dir)` is its one
+  * definition, and `apply(s, dir)` returns the value built for the
+  * current [[Tables.contentStamp]] of `tables` under `dir`, building it
+  * on first touch. Regenerating the parquet mid-session changes the
+  * stamp, so it starts a fresh entry instead of serving an index
+  * fitted to data that no longer exists.
+  *
+  * `valid(s, v)` gates reuse for values naming session-scoped state
+  * (catalog table names, frames holding a session's plans) that a
+  * later SparkSession in the same process won't have: a stale name
+  * would otherwise resolve to nothing (or to someone else's table)
+  * while the stamp still matches, so a value failing it is rebuilt in
+  * `s`. Session-independent artifacts keep the always-valid default.
+  *
+  * One build per key: `apply` is synchronized per memo, so concurrent
+  * callers build a key once, and builders doing filesystem + catalog
+  * work (DROP TABLE, path delete, saveAsTable) never destroy each
+  * other's files. A builder may ask another memo for its input (a
+  * routing asks for its model); those locks always nest in the
+  * direction of that dependency.
   */
-final class CorpusMemo[V](tables: String*) {
-  private val entries = scala.collection.concurrent.TrieMap.empty[String, V]
-  private def key(dir: String): String =
-    tables.map(Tables.contentStamp(dir, _)).mkString(";")
-  def getOrElseUpdate(dir: String, v: => V): V =
-    entries.getOrElseUpdate(key(dir), v)
+final class CorpusMemo[V](tables: String*)(
+    build: (SparkSession, String) => V,
+    valid: (SparkSession, V) => Boolean = (_: SparkSession, _: V) => true) {
+  private val entries = scala.collection.mutable.HashMap.empty[String, V]
 
-  /** [[getOrElseUpdate]] whose cached value must ALSO pass `valid` to be
-    * reused — for entries naming session-scoped state (catalog table
-    * names, cached plans) that a later SparkSession in the same process
-    * won't have: a stale name would otherwise resolve to nothing (or to
-    * someone else's table) while the content stamp still matches.
-    * Synchronized: the builders behind validity-checked entries do
-    * filesystem + catalog work (DROP TABLE, path delete, saveAsTable),
-    * and two concurrent builders for the same key would destroy each
-    * other's files — the plain getOrElseUpdate path got single-build
-    * atomicity from TrieMap; this path must not lose it.
-    */
-  def getOrElseValid(dir: String, valid: V => Boolean)(v: => V): V =
-    entries.synchronized {
-      val k = key(dir)
-      entries.get(k).filter(valid).getOrElse {
-        val nv = v; entries.put(k, nv); nv
-      }
+  def apply(s: SparkSession, dir: String): V = synchronized {
+    val key = tables.map(Tables.contentStamp(dir, _)).mkString(";")
+    entries.get(key).filter(valid(s, _)).getOrElse {
+      val v = build(s, dir)
+      entries(key) = v
+      v
     }
+  }
 }
 
 /** Collision-free per-(corpus-dir, process) tag for on-disk artifact
@@ -379,4 +382,41 @@ object ScratchDirs {
   def tmp(family: String, dir: String): String =
     register(s"${sys.props("java.io.tmpdir")}/graft_${family}_" +
       ArtifactTag(dir))
+}
+
+/** Once-per-corpus parquet artifact for a derived frame: on first
+  * touch of the corpus stamp, `build`'s frame is landed by `write`
+  * under [[ScratchDirs.tmp]]`(family, dir)`, and every call returns a
+  * plain parquet scan of it. This cuts lineage without pinning the
+  * intermediate in executor storage memory for the session (what an
+  * eager `localCheckpoint` costs): a columnar file on disk reads only
+  * the pruned columns, its capacity is storage rather than RAM, and a
+  * restarted executor re-reads instead of recomputing the lineage.
+  * Deterministic per corpus, since every builder derives purely from
+  * the stamped tables.
+  */
+final class ParquetArtifact(family: String, tables: String*)(
+    build: (SparkSession, String) => DataFrame,
+    write: (DataFrame, String) => Unit = ParquetArtifact.overwrite) {
+  private val paths = new CorpusMemo[String](tables: _*)((s, dir) => {
+    val p = ScratchDirs.tmp(family, dir)
+    write(build(s, dir), p)
+    p
+  })
+
+  /** The landed directory, for consumers that take a path. */
+  def path(s: SparkSession, dir: String): String = paths(s, dir)
+
+  def apply(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(path(s, dir))
+}
+
+object ParquetArtifact {
+  val overwrite: (DataFrame, String) => Unit =
+    (f, p) => f.write.mode("overwrite").parquet(p)
+
+  /** [[overwrite]], then release the frame's own cache entry: for
+    * builders that return a persisted frame (the framed trainers). */
+  val overwriteAndRelease: (DataFrame, String) => Unit =
+    (f, p) => { overwrite(f, p); f.unpersist(false); () }
 }

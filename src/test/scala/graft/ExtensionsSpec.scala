@@ -2146,14 +2146,20 @@ class ExtensionsSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSet
-    val ref = rows(TextDedup.incrementalNearDups(
-      fresh, hist, "doc_id", "text", threshold = 0.3))
-    val idx = TextDedup.bandIndexOf(hist, "doc_id", "text")
-    val got = rows(TextDedup.incrementalNearDupsIndexed(
-      fresh, idx, hist, "doc_id", "text", threshold = 0.3))
-    assert(ref.nonEmpty, "split must plant at least one near-dup pair")
-    assert(got == ref,
-      s"indexed path diverged: extra=${got -- ref}, missed=${ref -- got}")
+    // the default width and a non-default one: every stage (band
+    // index, batch shingles, history verification) must use the
+    // caller's shingleN
+    Seq(3, 2).foreach { n =>
+      val ref = rows(TextDedup.incrementalNearDups(
+        fresh, hist, "doc_id", "text", threshold = 0.3, shingleN = n))
+      val idx = TextDedup.bandIndexOf(hist, "doc_id", "text", shingleN = n)
+      val got = rows(TextDedup.incrementalNearDupsIndexed(
+        fresh, idx, hist, "doc_id", "text", threshold = 0.3, shingleN = n))
+      assert(ref.nonEmpty,
+        s"shingleN=$n: split must plant at least one near-dup pair")
+      assert(got == ref, s"shingleN=$n: indexed path diverged: " +
+        s"extra=${got -- ref}, missed=${ref -- got}")
+    }
   }
 
   test("unicode normalization: NFC composes, NFKC folds compatibility " +

@@ -752,7 +752,7 @@ class PlanShapeSpec extends SparkTestBase {
     val plan = unwrapped(df.queryExecution.executedPlan)
     // localCheckpoint(true) pins the whole intermediate in executor
     // storage memory and surfaces as an RDDScanExec ("Scan ExistingRDD")
-    // — the frameArtifact parquet path must leave only file scans
+    // — the ParquetArtifact path must leave only file scans
     val rddScans = plan.collect {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }

@@ -470,6 +470,41 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(hist).count() == 4)
   }
 
+  test("near-dup ingest micro-batches release what they stage: the " +
+       "CacheManager holds no more entries after batch 6 than after " +
+       "batch 1") {
+    import spark.implicits._
+    import graft.streaming.DocsStream
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // numCachedEntries is sql-package-private in Scala, public in bytecode
+    def cachedEntries: Int = cacheManager.getClass
+      .getMethod("numCachedEntries").invoke(cacheManager)
+      .asInstanceOf[Int]
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-cache")
+    val (hist, flags, bands) = (s"$tmp/hist", s"$tmp/flags", s"$tmp/bands")
+    val base = "the quick brown fox jumps over the lazy dog again and again"
+    val entries = (0L until 6L).map { b =>
+      // each batch: one near-dup of the first batch's doc, one novel doc
+      val batch = Seq(
+        DocsStream.Doc(b * 10L, s"$base in the morning of day $b"),
+        DocsStream.Doc(b * 10L + 1L,
+          s"novel document number $b about unrelated topic $b"))
+      DocsStream.flagBatch(spark, batch.toDF(), b, hist, flags, bands,
+        threshold = 0.3)
+      cachedEntries
+    }
+    assert(entries.last <= entries.head,
+      s"cache entries per batch grew: ${entries.mkString(", ")}")
+    // the batches still flag: every later day's near-dup matches history
+    val flagged = spark.read.parquet(flags).select("id").as[Long]
+      .collect().toSet
+    assert((1L until 6L).map(_ * 10L).forall(flagged.contains),
+      s"near-dups not flagged: $flagged")
+    assert(spark.read.parquet(hist).count() == 12)
+  }
+
   test("streaming quality-drift monitor: an in-distribution micro-batch " +
        "scores low, a garbage batch scores high, partitions are " +
        "batch-addressed") {
